@@ -92,7 +92,11 @@ def distributed_global_rank(
     replaced, no separate materialization job runs: the count pass both
     fills the cache and produces the per-partition counts in one job
     (boundary stability is covered by
-    ``test_distributed_global_rank_matches_window``)."""
+    ``test_distributed_global_rank_matches_window``).
+
+    ``total_out``, when given, receives the exact row count eagerly,
+    during this call (the count pass above), so callers may read
+    ``total_out[0]`` as soon as the call returns."""
     from pyspark import StorageLevel
 
     spark = df.sparkSession
@@ -549,7 +553,7 @@ def pipeline_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle files are reused across sample and fill), which costs about
     # what the checkpoint barrier does.  Order-alternated A/B at sf0.1,
     # 8 reps: legacy min 1.597 s vs ckpt 1.606 s, 4/8 pairwise
-    # (tools/env_ab.py).  Left un-pinned: same speed, simpler plan,
+    # (OPTIMIZATION_r16.md §C3).  Left un-pinned: same speed, simpler plan,
     # no executor-resident blocks.
     held: list = []
     ranked = distributed_global_rank(

@@ -55,9 +55,8 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(128 * 1024 * 1024)),
         )
-        # shuffle/spill/broadcast codec (guide §2.3): parameterized for the
-        # r15 A/B (tools/codec_ab.py) and for production tuning; the local
-        # default stays Spark's lz4 — at bench SF the measured shuffle
+        # shuffle/spill/broadcast codec (guide §2.3): parameterized for
+        # production tuning; the local default stays Spark's lz4 — at bench SF the measured shuffle
         # volumes are single-digit MB/entry, so zstd's ratio cannot repay
         # its CPU (numbers in OPTIMIZATION_r15.md §3)
         .config(
@@ -65,15 +64,15 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
         )
         # AQE runtime SMJ->SHJ rewrite threshold (guide §3.1): 0 = off
-        # (Spark default).  Parameterized so tools/shj_ab.py and a real
-        # cluster can set it; any nonzero value is partition-size-gated by
+        # (Spark default).  Parameterized so a real cluster can set it
+        # (measured in OPTIMIZATION_r15.md §3); any nonzero value is partition-size-gated by
         # AQE itself, so it stays scale-adaptive rather than local[32]-tuned
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "0"),
         )
         # sort-merge vs shuffled-hash preference (guide §3.1): measured in
-        # r15 (tools/shj_ab.py) and deliberately left at Spark's default.
+        # r15 (OPTIMIZATION_r15.md §3) and deliberately left at Spark's default.
         # A first fixed-order ABAB read "-4.7% aggregate" for
         # preferSortMergeJoin=false over 18 join-heavy entries — but a
         # plan-identity sweep showed only FOUR of 303 registry entries
@@ -99,7 +98,7 @@ def get_spark(
             ),
         )
     )
-    # opt-in event log (tools/codec_ab.py): task-level shuffle byte metrics
+    # opt-in event log (OPTIMIZATION_r15.md §3a): task-level shuffle byte metrics
     # are only readable from the event log with the UI disabled
     _elog = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
     if _elog:

@@ -12,8 +12,6 @@ keeps state stores from growing with 100 TB of history.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -230,24 +228,6 @@ def interval_join_stream_bucketed(
         "click_id",
         (F.unix_timestamp("c_ts") - F.unix_timestamp("s_ts")).alias("secs_after"),
     ]
-    if os.environ.get("SPARK_GRAFT_STREAM_R15_LEGACY") == "1":
-        # r1-r14 shape: union of two symmetric-hash joins (probe bucket
-        # b, then b+1) — each join buffers BOTH streams in its own state
-        # stores, so clicks are buffered twice and every micro-batch
-        # pays two joins' worth of state-store opens/commits
-        j_same = s.join(
-            c,
-            (F.col("c_user") == F.col("user_id"))
-            & (F.col("c_bucket") == F.col("s_bucket"))
-            & cond_time,
-        ).select(*cols)
-        j_next = s.join(
-            c,
-            (F.col("c_user") == F.col("user_id"))
-            & (F.col("c_bucket") == F.col("s_bucket") + 1)
-            & cond_time,
-        ).select(*cols)
-        return j_same.unionByName(j_next)
     # ONE symmetric-hash join over an exploded probe-bucket column: a
     # signup in bucket b probes {b, b+1} as two state rows of the SAME
     # join instead of two separate joins.  Set-equivalent (c_bucket
@@ -256,7 +236,8 @@ def interval_join_stream_bucketed(
     # per-(user, bucket) state scan bound that is the entry's point is
     # unchanged, clicks are buffered ONCE instead of twice, and each
     # micro-batch pays one join's state-store machinery instead of two
-    # (r15: guard 5.6 s entry, measured in tools/stream_ab.py).
+    # (OPTIMIZATION_r15.md: stream_interval_join_bucketed 4.23 -> 2.24 s
+    # at sf0.1, order-alternated).
     sx = s.withColumn(
         "probe_bucket",
         F.explode(F.array(F.col("s_bucket"), F.col("s_bucket") + F.lit(1))),

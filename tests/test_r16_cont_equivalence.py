@@ -1,54 +1,8 @@
-"""r16 continuation equivalence pins.
-
-1. The legacy-flagged rewrites this continuation kept must return
-   row-identical results to their legacy paths:
-   - SPARK_GRAFT_RANK_LEGACY  (quality_bigram_filter, curriculum_phases,
-     histogram_equidepth_prices — helper-total N + pinned rank inputs)
-   - SPARK_GRAFT_BPE_LEGACY   (bpe_train_merges — AQE-off merge loop)
-   - SPARK_GRAFT_BIGRAM_LEGACY (quality_bigram_filter — single-explode
-     per-(doc, bigram) count restructure)
-2. distributed_global_rank's total_out must equal the ranked row count.
-"""
+"""distributed_global_rank's total_out must equal the ranked row count
+(the entries that take N from it are pinned to their oracles in
+test_oracle_pins.py)."""
 
 from __future__ import annotations
-
-import os
-
-import pytest
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def registry():
-    from sparkml_som_spark.operators.registry import load_all
-
-    return load_all()
-
-
-def _rows(spark, registry, name):
-    return sorted(repr(tuple(r)) for r in registry[name].fn(spark, SF).collect())
-
-
-@pytest.mark.parametrize(
-    "flag,name",
-    [
-        ("SPARK_GRAFT_RANK_LEGACY", "quality_bigram_filter"),
-        ("SPARK_GRAFT_RANK_LEGACY", "curriculum_phases"),
-        ("SPARK_GRAFT_RANK_LEGACY", "histogram_equidepth_prices"),
-        ("SPARK_GRAFT_BPE_LEGACY", "bpe_train_merges"),
-        ("SPARK_GRAFT_BIGRAM_LEGACY", "quality_bigram_filter"),
-    ],
-)
-def test_legacy_flag_equivalent(spark, registry, flag, name):
-    os.environ.pop(flag, None)
-    new = _rows(spark, registry, name)
-    try:
-        os.environ[flag] = "1"
-        legacy = _rows(spark, registry, name)
-    finally:
-        os.environ.pop(flag, None)
-    assert new == legacy
 
 
 def test_rank_total_out_matches_count(spark, tables):

@@ -1,13 +1,12 @@
-"""r16 optimization equivalence pins.
+"""Stream and checkpoint-mode pins.
 
-1. The fused one-job-per-epoch stream paths (stream_minhash_dedup_guard,
-   stream_dedup_stratified_sample) must return row-identical results to
-   the r15 path (SPARK_GRAFT_STREAM_R16_PREV=1) and the legacy path
-   (SPARK_GRAFT_STREAM_R15_LEGACY=1).
-2. The SPARK_GRAFT_CKPT_MODE switch (materialize_reused) must be
+1. The SPARK_GRAFT_CKPT_MODE switch (materialize_reused) must be
    result-invariant across local / persist / reliable.
-3. The epoch-singleton debug guard must pass on the shipped source
+2. The epoch-singleton debug guard must pass on the shipped source
    construction (one file per epoch + maxFilesPerTrigger=1).
+
+The stream entries' rows are pinned to their oracles in
+test_oracle_pins.py.
 """
 
 from __future__ import annotations
@@ -28,25 +27,6 @@ def registry():
 
 def _rows(spark, registry, name):
     return sorted(repr(tuple(r)) for r in registry[name].fn(spark, SF).collect())
-
-
-@pytest.mark.parametrize(
-    "name", ["stream_minhash_dedup_guard", "stream_dedup_stratified_sample"]
-)
-def test_fused_stream_path_equivalent(spark, registry, name):
-    for v in ("SPARK_GRAFT_STREAM_R16_PREV", "SPARK_GRAFT_STREAM_R15_LEGACY"):
-        os.environ.pop(v, None)
-    fused = _rows(spark, registry, name)
-    try:
-        os.environ["SPARK_GRAFT_STREAM_R16_PREV"] = "1"
-        r15 = _rows(spark, registry, name)
-        os.environ.pop("SPARK_GRAFT_STREAM_R16_PREV", None)
-        os.environ["SPARK_GRAFT_STREAM_R15_LEGACY"] = "1"
-        legacy = _rows(spark, registry, name)
-    finally:
-        for v in ("SPARK_GRAFT_STREAM_R16_PREV", "SPARK_GRAFT_STREAM_R15_LEGACY"):
-            os.environ.pop(v, None)
-    assert fused == r15 == legacy
 
 
 def test_epoch_guard_passes_on_shipped_source(spark, registry):
